@@ -1,0 +1,1 @@
+"""Served-catalog benchmark; run with ``python3 perfbench/run.py``."""
