@@ -99,16 +99,16 @@ def _embeddings(rng, n, dim):
     })
 
 
-def write_tables(out_dir: str, seed: int, sizes: dict = SIZES) -> dict:
+def write_tables(out_dir: str, seed: int) -> dict:
     """Write the input parquet tables for ``seed``; returns row counts."""
     rng = np.random.default_rng(seed)
     os.makedirs(out_dir, exist_ok=True)
     tables = {
-        "orders": _orders(rng, sizes["orders"]),
-        "lineitem": _lineitem(rng, sizes["orders"], sizes["max_lines"]),
-        "documents": _documents(rng, sizes["documents"]),
-        "embeddings": _embeddings(rng, sizes["embeddings"],
-                                  sizes["dim"]),
+        "orders": _orders(rng, SIZES["orders"]),
+        "lineitem": _lineitem(rng, SIZES["orders"], SIZES["max_lines"]),
+        "documents": _documents(rng, SIZES["documents"]),
+        "embeddings": _embeddings(rng, SIZES["embeddings"],
+                                  SIZES["dim"]),
     }
     for name, t in tables.items():
         pq.write_table(t, os.path.join(out_dir, f"{name}.parquet"))

@@ -124,37 +124,12 @@ class JsonSeqParser:
 
 # ------------------------------------------------------------ host noise
 
-def cpu_ticks() -> tuple[int, int]:
-    """(steal ticks, total ticks) from the first line of /proc/stat."""
-    with open("/proc/stat") as f:
-        vals = [int(x) for x in f.readline().split()[1:]]
-    return (vals[7] if len(vals) > 7 else 0), sum(vals)
-
-
-def steal_share(t0: tuple[int, int], t1: tuple[int, int]) -> float:
-    total = t1[1] - t0[1]
-    return (t1[0] - t0[0]) / total if total > 0 else 0.0
-
-
-def stray_jvms() -> int:
-    """Live JVMs on the host (zombies excluded), counted before the
-    server starts: ``pgrep -c java`` as in bench.py, from /proc."""
-    n = 0
-    for d in os.listdir("/proc"):
-        if not d.isdigit():
-            continue
-        try:
-            with open(f"/proc/{d}/stat") as f:
-                head, rest = f.read().rsplit(")", 1)
-        except OSError:
-            continue
-        if head.split("(", 1)[1] == "java" and rest.split()[0] != "Z":
-            n += 1
-    return n
-
-
-def host_snapshot() -> dict:
-    return {"ticks": cpu_ticks(), "loadavg": list(os.getloadavg())}
+def steal_share(t0: tuple[int, int, int], t1: tuple[int, int, int]) -> float:
+    """Steal over busy ticks between two (steal, total, idle) readings of
+    /proc/stat: the share of the CPU time this guest wanted that the
+    hypervisor gave to another."""
+    busy = (t1[1] - t0[1]) - (t1[2] - t0[2])
+    return (t1[0] - t0[0]) / busy if busy > 0 else 0.0
 
 
 # ----------------------------------------------------------- process RSS

@@ -10,7 +10,8 @@ in a subprocess and the end-to-end metrics are reported; with
 ``--trace 1`` the same seeded sequence runs against an in-process
 server (``server.start_server``) whose layers are wrapped by
 ``perfbench/trace.py``, and the per-layer metrics are reported. Every
-response is checked; the last stdout line is the JSON result.
+response is checked; the last stdout line is the JSON result. Runs are
+gated on hypervisor steal with ``bench.py``'s probes (see STEAL_CEILING).
 """
 
 from __future__ import annotations
@@ -32,23 +33,41 @@ from concurrent.futures import ThreadPoolExecutor
 ROOT = os.getcwd()
 sys.path.insert(0, ROOT)    # the checkout: perfbench/ and metacat_spark/
 
+try:
+    # the host-noise probes of the repository's in-process benchmark
+    from bench import (_await_low_steal, _cpu_ticks, _idle_ticks,
+                       _stray_jvms)
+except ImportError as e:
+    sys.exit(f"perfbench: {e}; run from the repository root")
 from perfbench.datagen import write_tables  # noqa: E402
 from perfbench.measure import (JsonSeqParser, dir_usage,  # noqa: E402
-                               host_snapshot, median, RssSampler,
-                               tree_cpu_s,
-                               row_key, set_hash, steal_share, stray_jvms,
-                               tail, tree_pids)
+                               median, RssSampler, row_key, set_hash,
+                               steal_share, tail, tree_cpu_s, tree_pids)
 DRIVER_MEMORY = "2g"
 READY_TIMEOUT_S = 150
 REQUEST_TIMEOUT_S = 120
+# Host-noise gate. Before the server starts, wait up to START_WAIT_S for
+# a window with steal below STEAL_CEILING (bench._await_low_steal): steal
+# episodes on a shared host last minutes and slow every layer, CPU time
+# included. A measured pass whose steal share is above the ceiling is
+# set aside, the host is re-gated (up to REGATE_WAIT_S) and the same pass
+# is sent again, until RETRY_WINDOW_S after the first gate; never when that
+# gate found no quiet window. All runs in one checkout share GATE_BUDGET_S of
+# waiting (kept in GATE_LEDGER), so a long noisy spell cannot stretch a
+# series of runs without bound; a run waits at most about 90 s.
+STEAL_CEILING = 0.02
+START_WAIT_S = 60
+REGATE_WAIT_S = 5
+RETRY_WINDOW_S = 60
+GATE_BUDGET_S = 600
+GATE_LEDGER = os.path.join(ROOT, ".perfbench", "gate_wait_s")
 
 # registered in BENCHMARK.json: reported on every workload
-END_TO_END = {"setup_s": "s", "read_p50_ms": "ms",
-              "server_cpu_ms_per_read": "ms", "peak_rss_mb": "MB"}
+END_TO_END = {"setup_s": "s", "read_p50_ms": "ms"}
 # printed, not registered (see perfbench/README.md)
-REPORTED = {"reads_per_s": "1/s", "first_row_p50_ms": "ms",
-            "rows_per_s": "1/s", "read_tail_ms": "ms",
-            "write_p50_ms": "ms", "write_tail_ms": "ms",
+REPORTED = {"peak_rss_mb": "MB", "server_cpu_ms_per_read": "ms",
+            "reads_per_s": "1/s", "first_row_p50_ms": "ms",
+            "rows_per_s": "1/s", "read_tail_ms": "ms", "write_p50_ms": "ms", "write_tail_ms": "ms",
             "write_amp": "ratio", "error_rate": "ratio"}
 # registered: layers that run on both workloads
 PER_LAYER = {
@@ -65,6 +84,7 @@ PER_LAYER = {
 }
 # printed: layers that run on one workload only (0 on the other)
 LAYER_REPORTED = {
+    "stats.restart_populate_s": "s",
     "dml.write_ms": "ms", "dml.jobs": "count",
     "durable.commit_ms": "ms", "durable.bytes_written": "bytes",
     "durable.files_written": "count", "durable.attach_s": "s",
@@ -84,6 +104,29 @@ def server_env(work: str) -> dict:
     return {"SPARK_GRAFT_CPUS": str(cpus()), "SPARK_LOCAL_DIRS": tmp,
             "SPARK_DRIVER_MEMORY": DRIVER_MEMORY, "TMPDIR": tmp,
             "JAVA_TOOL_OPTIONS": f"-Djava.io.tmpdir={tmp}"}
+
+
+def host_ticks() -> tuple[int, int, int]:
+    """(steal, total, idle) ticks of /proc/stat."""
+    return (*_cpu_ticks(), _idle_ticks())
+
+
+def gate(max_wait_s: float) -> float:
+    """Wait for a low-steal window for at most ``max_wait_s``, and at most
+    what is left of the checkout's GATE_BUDGET_S; charge the time to
+    GATE_LEDGER. Returns the last probed steal share (-1 if skipped)."""
+    try:
+        with open(GATE_LEDGER) as f:
+            spent = float(f.read())
+    except (OSError, ValueError):
+        spent = 0.0
+    t = time.monotonic()
+    share = _await_low_steal(
+        threshold=STEAL_CEILING, poll_s=5,
+        max_wait_s=max(0.0, min(max_wait_s, GATE_BUDGET_S - spent)))
+    with open(GATE_LEDGER, "w") as f:
+        f.write(f"{spent + time.monotonic() - t:.3f}")
+    return share
 
 
 def free_port() -> int:
@@ -300,13 +343,12 @@ def check(op, status: int, records: list, raw: bytes):
 
 # --------------------------------------------------------------- metrics
 
-def end_to_end(samples: list, t0: float) -> tuple[dict, dict]:
-    """Read latency and throughput over the measured window (phase
-    "measure", from ``t0``); write latency over every write."""
-    meas = [s for s in samples if s["phase"] == "measure"]
-    window = max(s["end"] for s in meas) - t0
-    reads = [s for s in meas if s["kind"] == "read"]
-    writes = [s for s in samples if s["kind"] == "write"]
+def end_to_end(passes: list, writes: list) -> tuple[dict, dict]:
+    """Read latency and throughput over the kept measured passes (see
+    ``measure_loop``); write latency over every write."""
+    kept = [p for p in passes if p["kept"]]
+    reads = [s for p in kept for s in p["samples"] if s["kind"] == "read"]
+    window = sum(p["seconds"] for p in kept)
     lat = [1e3 * (s["end"] - s["start"]) for s in reads]
     first = [1e3 * (s["first"] - s["start"]) for s in reads
              if s["first"] is not None]
@@ -316,9 +358,12 @@ def end_to_end(samples: list, t0: float) -> tuple[dict, dict]:
            "rows_per_s": sum(s["records"] for s in reads) / window}
     out["read_tail_ms"], pct, n = tail(lat)
     info = {"read_tail_pct": pct, "read_samples": n,
-            "measured_s": window}
+            "measured_s": window,
+            "pass_steal": [round(p["steal"], 4) for p in passes],
+            "pass_kept": [p["kept"] for p in passes],
+            "kept_steal_max": max(p["steal"] for p in kept)}
     per = {}
-    for s in meas + writes:
+    for s in reads + writes:
         per.setdefault(s["template"], []).append(1e3 * (s["end"] - s["start"]))
     info["template_median_ms"] = {k: round(median(v), 1)
                                   for k, v in per.items()}
@@ -330,25 +375,51 @@ def end_to_end(samples: list, t0: float) -> tuple[dict, dict]:
     return out, info
 
 
-def measure_loop(gen, passes: list, seconds: float, t0: float,
-                 traced: bool = False, min_passes: int = 1) -> None:
-    """Replay whole passes (lists of ops), in order and cyclically: at
-    least ``min_passes``, then more while fewer than ``seconds`` have
-    passed since ``t0``. Every run measures complete passes, so the mix
-    of templates is the same in every run."""
-    i = 0
-    while i < min_passes or time.perf_counter() < t0 + seconds:
-        for op in passes[i % len(passes)]:
-            if traced:
-                gen.send_pair(op)
-            else:
-                gen.send(op, "measure")
-        i += 1
+def measure_loop(gen, passes: list, seconds: float, deadline: float,
+                 traced: bool = False, cpu_pid: int = 0) -> list:
+    """Send every pass (a list of ops) once, in order; then the whole
+    list again while the kept passes have taken fewer than ``seconds``.
+    A run therefore measures whole copies of one mix, whatever the
+    program's speed.
+
+    A pass whose steal share is above STEAL_CEILING is not kept: the
+    host is re-gated and the same pass is sent again, until ``deadline``
+    (time.monotonic()). The last attempt of a pass is kept either way. Returns one record
+    per attempt: samples, seconds, steal share, server CPU seconds (of
+    ``cpu_pid``'s tree) and whether it is kept."""
+    out = []
+    while not out or sum(p["seconds"] for p in out if p["kept"]) < seconds:
+        for ops in passes:
+            while True:
+                n, h0, t = len(gen.samples), host_ticks(), time.perf_counter()
+                cpu = tree_cpu_s(cpu_pid) if cpu_pid else 0.0
+                for op in ops:
+                    if traced:
+                        gen.send_pair(op)
+                    else:
+                        gen.send(op, "measure")
+                rec = {"samples": [s for s in gen.samples[n:]
+                                   if s["phase"] == "measure"],
+                       "seconds": time.perf_counter() - t,
+                       "steal": steal_share(h0, host_ticks()),
+                       "cpu_s": (tree_cpu_s(cpu_pid) - cpu
+                                 if cpu_pid else 0.0),
+                       "kept": True}
+                out.append(rec)
+                if (rec["steal"] <= STEAL_CEILING
+                        or time.monotonic() > deadline):
+                    break
+                rec["kept"] = False
+                print(f"# pass steal {rec['steal']:.1%} > "
+                      f"{STEAL_CEILING:.0%}: re-gating and sending the "
+                      f"pass again", file=sys.stderr)
+                gate(REGATE_WAIT_S)
+    return out
 
 
 # ------------------------------------------------------------- workloads
 
-def run_served(args, work: str, spec: dict) -> dict:
+def run_served(args, work: str, spec: dict, deadline: float) -> dict:
     """--trace 0: the server in a subprocess. declare_and_query runs its
     write sequence and then one or more read-only passes over the
     mutated catalog."""
@@ -368,17 +439,11 @@ def run_served(args, work: str, spec: dict) -> dict:
             for op in spec["sequence"]:
                 gen.send(op, "sequence")
             b1, _ = dir_usage(durable)
-            cpu0, t0 = tree_cpu_s(srv.proc.pid), time.perf_counter()
-            measure_loop(gen, [spec["read_pass"]], args.seconds, t0)
-        else:
-            # two rotations at least: on a slow host one rotation outlasts
-            # the window, and a single sample per template is the noisiest
-            # measurement
-            cpu0, t0 = tree_cpu_s(srv.proc.pid), time.perf_counter()
-            measure_loop(gen, spec["cycles"], args.seconds, t0,
-                         min_passes=2)
-        cpu = tree_cpu_s(srv.proc.pid) - cpu0
-        metrics, info = end_to_end(gen.samples, t0)
+        passes = measure_loop(gen, spec["passes"], args.seconds, deadline,
+                              cpu_pid=srv.proc.pid)
+        metrics, info = end_to_end(
+            passes, [s for s in gen.samples if s["kind"] == "write"])
+        cpu = sum(p["cpu_s"] for p in passes if p["kept"])
         metrics["server_cpu_ms_per_read"] = 1e3 * cpu / info["read_samples"]
         metrics["setup_s"] = ready + warmup
         info["ready_s"], info["warmup_s"] = ready, warmup
@@ -392,7 +457,7 @@ def run_served(args, work: str, spec: dict) -> dict:
     return {"metrics": metrics, "info": info, "load": gen}
 
 
-def run_traced(args, work: str, spec: dict) -> dict:
+def run_traced(args, work: str, spec: dict, deadline: float) -> dict:
     """--trace 1: the same sequence against an in-process server whose
     layers are wrapped; reads are sent twice, untraced and traced (see
     ``LoadGen.send_pair``)."""
@@ -434,8 +499,8 @@ def run_traced(args, work: str, spec: dict) -> dict:
         if declare:
             for op in spec["sequence"]:
                 gen.send_pair(op, settle=True)
-            measure_loop(gen, [spec["read_pass"]], args.seconds,
-                         time.perf_counter(), True)
+            measure_loop(gen, spec["passes"], args.seconds, deadline,
+                         traced=True)
             # an in-process restart: a new catalog over the same
             # warehouse attaches the durable root
             client2 = MetaCatSparkClient(
@@ -447,7 +512,8 @@ def run_traced(args, work: str, spec: dict) -> dict:
             for op in spec["verify"]:
                 gen.send(op, "verify")
         else:
-            measure_loop(gen, spec["cycles"], args.seconds, t0, True)
+            measure_loop(gen, spec["passes"], args.seconds, deadline,
+                         traced=True)
         timings["measure_s"] = time.perf_counter() - t0
         table = layer_table(tracer.spans)
         table["catalog.files_partitions"] = \
@@ -456,8 +522,16 @@ def run_traced(args, work: str, spec: dict) -> dict:
             os.path.join(srv_dir, "spark-warehouse"))[0] / 2**20
         table["session.start_s"] = timings["session.start_s"]
         table["catalog.ingest_s"] = timings["catalog.ingest_s"]
-        table["durable.attach_s"] = 0.0     # no durable root: no attach
-        table.update(tracer.timings)
+        # startup phases: the first server start's stats refresh on
+        # both workloads; the in-process restart's refresh and durable
+        # attach (the last calls) on declare_and_query
+        calls = tracer.timings
+        table["stats.populate_s"] = calls["stats.populate_s"][0]
+        if declare:
+            table["stats.restart_populate_s"] = calls["stats.populate_s"][-1]
+            table["durable.attach_s"] = calls["durable.attach_s"][-1]
+        else:
+            table["durable.attach_s"] = 0.0     # no durable root
         base = sum(u["end"] - u["start"] for u, _ in gen.pairs)
         traced = sum(t["end"] - t["start"] for _, t in gen.pairs)
         table["trace.overhead_pct"] = 100.0 * (traced - base) / base
@@ -505,7 +579,7 @@ def prepare(args, work: str) -> tuple[dict, dict]:
     spec = WORKLOADS[args.workload](args.seed, data_dir)
     oracle = Oracle(data_dir)
     try:
-        for key in ("warmup", "cycles", "sequence", "verify", "read_pass"):
+        for key in ("warmup", "passes", "sequence", "verify"):
             ops = spec.get(key, [])
             for op in (o for x in ops for o in
                        (x if isinstance(x, list) else [x])):
@@ -530,30 +604,28 @@ def main(argv=None) -> int:
     p.add_argument("--trace", type=int, choices=[0, 1], default=0)
     args = p.parse_args(argv)
     signal.signal(signal.SIGTERM, _exit_on_sigterm)
-    if not os.path.isfile(os.path.join(ROOT, "metacat_spark",
-                                       "server.py")):
-        print("perfbench: metacat_spark/ not found; run from the "
-              "repository root", file=sys.stderr)
-        return 2
-
     work = os.path.join(ROOT, ".perfbench", "runs",
                         f"{args.workload}-s{args.seed}-{os.getpid()}")
     out_dir = os.path.join(ROOT, ".perfbench", "results")
     os.makedirs(work)
     os.makedirs(out_dir, exist_ok=True)
     try:
-        h0, stray = host_snapshot(), stray_jvms()
+        h0, la0, stray = host_ticks(), os.getloadavg(), _stray_jvms()
         t = time.perf_counter()
         spec, sizes = prepare(args, work)
         prep_s = time.perf_counter() - t
+        gate_steal = gate(START_WAIT_S)
+        quiet = 0 <= gate_steal < STEAL_CEILING
         run = run_traced if args.trace else run_served
-        res = run(args, work, spec)
-        h1 = host_snapshot()
+        res = run(args, work, spec,
+                  time.monotonic() + (RETRY_WINDOW_S if quiet else 0))
+        h1, la1 = host_ticks(), os.getloadavg()
     finally:
         shutil.rmtree(work, ignore_errors=True)
     gen = res["load"]
-    host = {"steal_share": steal_share(h0["ticks"], h1["ticks"]),
-            "loadavg_start": h0["loadavg"], "loadavg_end": h1["loadavg"],
+    host = {"steal_share": steal_share(h0, h1),
+            "gate_steal_share": gate_steal,
+            "loadavg_start": la0, "loadavg_end": la1,
             "stray_jvms": stray, "SPARK_GRAFT_CPUS": cpus(),
             "driver_memory": DRIVER_MEMORY,
             "warehouse": os.path.relpath(res["info"].pop("warehouse"),

@@ -124,6 +124,11 @@ def _signature(ops):
         for o in ops]
 
 
+def _flat(ops):
+    """A list of ops, or of passes (lists of ops), as one list of ops."""
+    return [o for x in ops for o in (x if isinstance(x, list) else [x])]
+
+
 @pytest.fixture(scope="module")
 def data(tmp_path_factory):
     out = {}
@@ -145,11 +150,9 @@ def test_same_seed_same_inputs(tmp_path, data):
 def test_same_seed_same_interactive_sequence(data):
     a, b = (interactive_mql(7, data[7]) for _ in range(2))
     c = interactive_mql(8, data[8])
-    for key in ("warmup", "cycles"):
-        flat = (lambda s: [o for x in s[key] for o in
-                           (x if isinstance(x, list) else [x])])
-        assert _signature(flat(a)) == _signature(flat(b))
-        assert _signature(flat(a)) != _signature(flat(c))
+    for key in ("warmup", "passes"):
+        assert _signature(_flat(a[key])) == _signature(_flat(b[key]))
+        assert _signature(_flat(a[key])) != _signature(_flat(c[key]))
     # the seed changes parameters, never the template order
     assert [o.template for o in a["warmup"]] == \
         [o.template for o in c["warmup"]]
@@ -158,7 +161,81 @@ def test_same_seed_same_interactive_sequence(data):
 def test_same_seed_same_declare_sequence(data):
     a, b = (declare_and_query(7, data[7]) for _ in range(2))
     c = declare_and_query(8, data[8])
-    for key in ("sequence", "verify", "read_pass"):
-        assert _signature(a[key]) == _signature(b[key])
-        assert _signature(a[key]) != _signature(c[key])
+    for key in ("sequence", "verify", "passes"):
+        assert _signature(_flat(a[key])) == _signature(_flat(b[key]))
+        assert _signature(_flat(a[key])) != _signature(_flat(c[key]))
     assert a["payload_bytes"] == b["payload_bytes"]
+
+
+# ------------------------------------------------------ steal-gated passes
+
+class _FakeGen:
+    def __init__(self):
+        self.samples, self.sent = [], []
+
+    def send(self, op, phase, traced=False):
+        self.sent.append(op)
+        self.samples.append({"kind": "read", "phase": phase})
+
+
+def _steal_feed(monkeypatch, shares):
+    """Make each measured pass read the next steal share of ``shares``."""
+    from perfbench import run
+    shares = iter(shares)
+    state = {"steal": 0, "total": 0}
+
+    def ticks():
+        # called before and after every pass: 100 busy ticks a pass
+        if state["total"] % 200 == 100:
+            state["steal"] += round(100 * next(shares))
+        state["total"] += 100
+        return state["steal"], state["total"], 0
+    monkeypatch.setattr(run, "host_ticks", ticks)
+    monkeypatch.setattr(run, "gate", lambda max_wait_s: 0.0)
+    return run
+
+
+def test_noisy_pass_is_sent_again_and_set_aside(monkeypatch):
+    run = _steal_feed(monkeypatch, [0.0, 0.30, 0.0])
+    gen = _FakeGen()
+    out = run.measure_loop(gen, [["a1", "a2"], ["b1"]], 0, float("inf"))
+    assert gen.sent == ["a1", "a2", "b1", "b1"]
+    assert [p["kept"] for p in out] == [True, False, True]
+    assert [round(p["steal"], 2) for p in out] == [0.0, 0.30, 0.0]
+
+
+def test_retries_end_at_the_deadline_and_the_last_attempt_is_kept(
+        monkeypatch):
+    run = _steal_feed(monkeypatch, [0.5] * 5)
+    clock = iter([0.0, 1.0, 2.0, 3.0, 4.0])
+    monkeypatch.setattr(run.time, "monotonic", lambda: next(clock))
+    gen = _FakeGen()
+    out = run.measure_loop(gen, [["a"], ["b"]], 0, 1.5)
+    assert gen.sent == ["a", "a", "a", "b"]
+    assert [p["kept"] for p in out] == [False, False, True, True]
+
+
+def test_no_retries_after_the_deadline(monkeypatch):
+    run = _steal_feed(monkeypatch, [0.5, 0.5])
+    gen = _FakeGen()
+    out = run.measure_loop(gen, [["a"], ["b"]], 0, 0.0)
+    assert gen.sent == ["a", "b"]
+    assert all(p["kept"] for p in out)
+
+
+def test_gate_waits_no_longer_than_the_checkout_budget(monkeypatch, tmp_path):
+    from perfbench import run
+    asked = []
+
+    def wait(threshold, poll_s, max_wait_s):
+        asked.append(max_wait_s)
+        return 0.0
+    monkeypatch.setattr(run, "_await_low_steal", wait)
+    monkeypatch.setattr(run, "GATE_LEDGER", str(tmp_path / "ledger"))
+    (tmp_path / "ledger").write_text(str(run.GATE_BUDGET_S - 20))
+    run.gate(60)
+    run.gate(5)
+    (tmp_path / "ledger").write_text(str(run.GATE_BUDGET_S + 1))
+    run.gate(60)
+    assert asked == [20, 5, 0]
+    assert float((tmp_path / "ledger").read_text()) >= run.GATE_BUDGET_S + 1

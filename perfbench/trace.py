@@ -51,7 +51,7 @@ class Tracer:
         self._local = threading.local()
         self._lock = threading.Lock()
         self._patches: list[tuple] = []
-        self.timings: dict[str, float] = {}
+        self.timings: dict[str, list] = defaultdict(list)
 
     # ------------------------------------------------------------ spans
     def _stack(self) -> list:
@@ -170,7 +170,7 @@ class Tracer:
         return make
 
     def _timer(self, name):
-        """Record the duration of the latest call in ``timings``."""
+        """Append the duration of every call to ``timings[name]``."""
         def make(orig):
             @functools.wraps(orig)
             def wrapper(*a, **k):
@@ -178,7 +178,7 @@ class Tracer:
                 try:
                     return orig(*a, **k)
                 finally:
-                    self.timings[name] = time.perf_counter() - t
+                    self.timings[name].append(time.perf_counter() - t)
             return wrapper
         return make
 

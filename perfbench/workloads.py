@@ -24,10 +24,9 @@ from perfbench.oracle import (ACTIVE, ADLER32, FILE_FIELDS, files_where,
 DUNE = [f"{w}_{b}" for w in ("urgent", "high", "medium", "notspec", "low")
         for b in range(4)]
 FLAGS = ["r", "a", "n"]
-VARIANTS = 3            # parameter sets per interactive template
-# declare_and_query: rounds of (declare, update, add_files, retire) and
-# files per declare; one round keeps a run near a minute long
-ROUNDS, BATCH = 1, 100
+VARIANTS = 2            # measured parameter sets per interactive template
+BATCH = 100             # declare_and_query: files per declare
+UPDATED_RUN = 20000     # core.run the updated declared file is given
 # interactive_mql's template order; cheap and expensive ones alternate
 ROTATION = ["point_lookup", "bulk_listing_meta", "predicate_bfq",
             "subsets_recursive", "skip_limit", "corpus_analyze",
@@ -157,13 +156,18 @@ def _interactive_templates(rng: random.Random, ids: list) -> list:
 
 
 def interactive_mql(seed: int, data_dir: str) -> dict:
-    """``warmup``: one instance of every template; ``cycles``: VARIANTS
-    more, replayed in order for as long as the run lasts."""
+    """``warmup``: one instance of every template; ``passes``: VARIANTS
+    more rotations, the measured window (see run.measure_loop). A pass
+    is half a rotation, about 5 s, so that re-sending one the host's
+    steal spoiled costs little."""
     rng = random.Random(seed)
     ids = file_ids(data_dir)
     variants = [_interactive_templates(rng, ids)
                 for _ in range(VARIANTS + 1)]
-    return {"warmup": variants[0], "cycles": variants[1:]}
+    half = (len(ROTATION) + 1) // 2
+    return {"warmup": variants[0],
+            "passes": [v[i:i + half] for v in variants[1:]
+                       for i in (0, half)]}
 
 
 # ----------------------------------------------------- declare_and_query
@@ -179,36 +183,45 @@ def _count_expect(records) -> dict:
 
 
 def declare_and_query(seed: int, data_dir: str) -> dict:
-    """A fixed sequence of writes, each followed by a read that selects
-    what it wrote. Declared files carry core.run values >= 1000, which no base
-    file has, so the reads select exactly the declared files; their
-    expectations come from a model of the acknowledged writes, and the
-    parents of declared files (base files) from DuckDB.
+    """A fixed sequence of writes (declare BATCH files, update one's
+    metadata, add some to a dataset, retire one), each followed by a read
+    that selects what it wrote. Declared files carry a core.run value >=
+    1000, which no base file has, so the reads select exactly the
+    declared files; their expectations come from a model of the
+    acknowledged writes, and the parents of declared files (base files)
+    from DuckDB.
 
     Returns ``sequence`` (the writes and their read-after-write checks),
-    ``read_pass`` (reads of the final model, replayed in whole passes as
-    the measured window), ``verify`` (reads of the final model that prove
+    ``passes`` (one pass of reads of the final model, replayed as the
+    measured window), ``verify`` (reads of the final model that prove
     every acknowledged write survived a restart) and the byte count of
     the declared payload."""
     rng = random.Random(seed)
     ids = file_ids(data_dir)
-    declared: dict[str, dict] = {}      # id -> record (+ retired)
-    added: set[str] = set()
-    updated: list[str] = []
-    seq: list[Op] = []
-    payload = 0
+    run = rng.randrange(1000, 10000)
+    rows = []
+    for i in range(BATCH):
+        meta = {"core.run": run, "core.x": round(rng.random(), 3),
+                "core.good": rng.random() < 0.6,
+                "core.data_type": rng.choice(["mc", "data"])}
+        rec = {"id": f"b{seed}n{i:04d}", "namespace": "test",
+               "name": f"bench_{seed}_{i}.data",
+               "size": rng.randrange(1000, 10**7), "metadata": meta}
+        if rng.random() < 0.3:
+            rec["parents"] = [rng.choice(ids)]
+        rows.append(rec)
+    body = json.dumps(rows).encode()
+    declared = {r["id"]: dict(r, retired=False) for r in rows}
 
     def active(pred=lambda r: True):
         return [r for r in declared.values()
                 if not r["retired"] and pred(r)]
 
-    def run_of(r):
-        return r["metadata"]["core.run"]
-
-    def count_run(run):
+    def count_run():
         return Op("read", "count_declared_run", query_path(
             f"files where core.run = {run}", summary="count"),
-            expect=_count_expect(active(lambda r: run_of(r) == run)))
+            expect=_count_expect(active(
+                lambda r: r["metadata"]["core.run"] == run)))
 
     def select_declared():
         return Op("read", "select_declared", query_path(
@@ -220,73 +233,52 @@ def declare_and_query(seed: int, data_dir: str) -> dict:
             "files from test:all where core.run >= 1000"), stream=True,
             expect=_rows_expect(active(lambda r: r["id"] in added)))
 
-    def parents_of(run):
-        parents = sorted({p for r in active(lambda r: run_of(r) == run)
-                          for p in r.get("parents", [])})
+    def parents_of_run():
+        parents = sorted({p for r in active(
+            lambda r: r["metadata"]["core.run"] == run)
+            for p in r.get("parents", [])})
         cond = ("id in (" + ", ".join(f"'{p}'" for p in parents) + ")"
                 if parents else "false")
         return Op("read", "parents_of_declared", query_path(
             f"parents(files where core.run = {run})"), stream=True,
             oracle=_rows(files_where(cond)))
 
-    def point(fid):
-        return Op("read", "point_updated", f"/data/file?fid={fid}",
-                  expect={"mode": "file_meta", "id": fid,
-                          "core.run": run_of(declared[fid])})
+    def point_updated():
+        return Op("read", "point_updated", f"/data/file?fid={upd}",
+                  expect={"mode": "file_meta", "id": upd,
+                          "core.run": UPDATED_RUN})
 
-    runs = rng.sample(range(1000, 10000), ROUNDS)
-    for rnd, run in enumerate(runs):
-        rows = []
-        for i in range(BATCH):
-            meta = {"core.run": run, "core.x": round(rng.random(), 3),
-                    "core.good": rng.random() < 0.6,
-                    "core.data_type": rng.choice(["mc", "data"])}
-            rec = {"id": f"b{seed}r{rnd:02d}n{i:04d}", "namespace": "test",
-                   "name": f"bench_{seed}_{rnd}_{i}.data",
-                   "size": rng.randrange(1000, 10**7), "metadata": meta}
-            if rng.random() < 0.3:
-                rec["parents"] = [rng.choice(ids)]
-            rows.append(rec)
-        body = json.dumps(rows).encode()
-        payload += len(body)
-        seq.append(Op("write", "declare", "/data/declare_files",
-                      body=body))
-        for rec in rows:
-            declared[rec["id"]] = dict(rec, retired=False)
-        seq.append(count_run(run))
+    seq = [Op("write", "declare", "/data/declare_files", body=body),
+           count_run()]
 
-        upd = rng.choice(rows)["id"]
-        seq.append(Op("write", "update_file_meta",
-                      f"/data/update_file_meta?fid={upd}",
-                      body=json.dumps({"metadata": {"core.run": 20000 + rnd},
-                                       "mode": "update"}).encode()))
-        declared[upd]["metadata"] = dict(declared[upd]["metadata"],
-                                         **{"core.run": 20000 + rnd})
-        updated.append(upd)
-        seq.append(point(upd))
+    upd = rng.choice(rows)["id"]
+    seq.append(Op("write", "update_file_meta",
+                  f"/data/update_file_meta?fid={upd}",
+                  body=json.dumps({"metadata": {"core.run": UPDATED_RUN},
+                                   "mode": "update"}).encode()))
+    declared[upd]["metadata"] = dict(declared[upd]["metadata"],
+                                     **{"core.run": UPDATED_RUN})
+    seq.append(point_updated())
 
-        add = [r["id"] for r in rng.sample(rows, 20)]
-        seq.append(Op("write", "add_files", "/data/add_files?dataset=test:all",
-                      body=json.dumps(add).encode()))
-        added.update(add)
-        seq.append(select_added())
-        ret = rng.choice([r["id"] for r in rows if r["id"] != upd])
-        seq.append(Op("write", "retire", f"/data/retire_file?fid={ret}",
-                      body=b""))
-        declared[ret]["retired"] = True
-        seq.append(select_declared())
-        seq.append(parents_of(run))
+    added = {r["id"] for r in rng.sample(rows, 20)}
+    seq.append(Op("write", "add_files", "/data/add_files?dataset=test:all",
+                  body=json.dumps(sorted(added)).encode()))
+    seq.append(select_added())
+
+    ret = rng.choice([r["id"] for r in rows if r["id"] != upd])
+    seq.append(Op("write", "retire", f"/data/retire_file?fid={ret}",
+                  body=b""))
+    declared[ret]["retired"] = True
+    seq += [select_declared(), parents_of_run()]
 
     verify = [Op("read", "verify_declared", query_path(
         "files where core.run >= 1000", include_retired_files="yes"),
         stream=True, expect=_rows_expect(declared.values())),
-        select_declared(), select_added()] + [point(u) for u in updated]
-    read_pass = [select_declared(), select_added()]
-    for run in runs:
-        read_pass += [count_run(run), parents_of(run)]
-    read_pass += [point(u) for u in updated]
-    return {"sequence": seq, "verify": verify, "read_pass": read_pass,
-            "payload_bytes": payload}
+        select_declared(), select_added(), point_updated()]
+    read_pass = [select_declared(), select_added(), count_run(),
+                 parents_of_run(), point_updated()]
+    return {"sequence": seq, "verify": verify, "passes": [read_pass],
+            "payload_bytes": len(body)}
 
 
 WORKLOADS = {"interactive_mql": interactive_mql,
